@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
@@ -11,21 +12,23 @@ import graft.{EngineSession, SparkEntry}
 import graft.ops.Tables
 
 /** The benchmark's JVM side: set up the engine, run one workload's
-  * queries back to back in a closed loop (one client), and write what
-  * it measured as JSON for `run.py`, which turns it into metrics and
-  * checks every count.
+  * queries pass after pass, back to back in a closed loop (one client),
+  * and write what it measured as JSON for `run.py`, which turns it into
+  * metrics and checks every count.
   *
   * It calls only the engine's public entry points: `EngineSession`,
-  * `Tables.t`, `SparkEntry.queries`, the `functions` kernels, and
-  * Spark's listener and metric APIs.
+  * `Tables.t`, `Tables.resetDerived`, `SparkEntry.queries`, the
+  * `functions` kernels, and Spark's listener and metric APIs.
   *
   * usage: Harness --out <file> --catalog 1   (query names and oracle SQL)
   *        Harness --out <file> --data <sfDir> --orders <file>
-  *   --seconds <s> --setups <n> --cpus <n> --trace <0|1>
-  *   [--small <sfDir>]
+  *   --warmup <w> --passes <n> --cpus <n> --trace <0|1> [--small <sfDir>]
   * `--orders` holds one comma-separated query order per line; pass i
-  * runs line i. The first pass always runs; more run while less than
-  * `--seconds` has gone by, and a started pass always finishes.
+  * runs line i. Passes 0 to w-1 are the warm-up (pass 0 is cold: the
+  * JIT and the codegen cache fill); the next n are timed. A traced run
+  * traces the warm-up and one timed pass.
+  * Every pass starts with no memo: `Tables.resetDerived` runs before it,
+  * never inside it, so a shared intermediate is built once per pass.
   */
 object Harness {
   def main(args: Array[String]): Unit = {
@@ -42,72 +45,42 @@ object Harness {
     val dir = opt("data")
     val cpus = opt("cpus")
     val traced = opt("trace") == "1"
-    val orders = Files.readAllLines(Paths.get(opt("orders"))).toArray
-      .map(_.toString.trim).filter(_.nonEmpty).map(_.split(",").toSeq)
+    val warmup = opt("warmup").toInt
+    val timed = if (traced) 1 else opt("passes").toInt
+    val orders = Files.readAllLines(Paths.get(opt("orders"))).asScala.toSeq
+      .map(_.trim).filter(_.nonEmpty).map(_.split(",").toSeq)
     val out = new Json
 
-    // Set-up: session plus base-table registration, several times; the
-    // first also covers JVM launch. All but the last session are stopped.
-    val launchMs = ManagementFactory.getRuntimeMXBean.getStartTime
-    val setups = ArrayBuffer.empty[Double]
-    var spark: SparkSession = null
-    for (i <- 1 to opt("setups").toInt) {
-      if (spark != null) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val t0 = if (i == 1) launchMs else System.currentTimeMillis()
-      spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      Tables.names.foreach(Tables.t(spark, dir, _))
-      setups += (System.currentTimeMillis() - t0) / 1e3
-    }
-    out.arr("setup_s", setups.map(Json.num))
+    // Set-up: session plus base-table registration. `run.py` times it
+    // from the JVM's launch to the moment written here.
+    val spark = EngineSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    Tables.names.foreach(Tables.t(spark, dir, _))
+    out.num("setup_done_ms", System.currentTimeMillis().toDouble)
 
-    val trace = if (traced) Some(new Trace(spark)) else None
     val queries = SparkEntry.queries
-    val seconds = opt("seconds").toDouble
-    val os = ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val records = ArrayBuffer.empty[Json]
-    val passWalls, passCpu, passSteal = ArrayBuffer.empty[Double]
-    val suite0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - suite0) / 1e9
-    var pass = 0
-    while (pass < orders.length && (pass == 0 || elapsed < seconds)) {
-      val p0 = System.nanoTime()
-      val c0 = os.getProcessCpuTime
-      val s0 = stealSeconds()
-      orders(pass).foreach { q =>
-        records += runQuery(spark, dir, q, queries(q), pass, trace)
-      }
-      passWalls += (System.nanoTime() - p0) / 1e9
-      passCpu += (os.getProcessCpuTime - c0) / 1e9
-      passSteal += stealSeconds() - s0
-      pass += 1
+    val trace = if (traced) Some(new Trace(spark)) else None
+    def pass(i: Int, d: String, t: Option[Trace]): Pass = {
+      Tables.resetDerived(spark)
+      Pass.run(i, orders(i).map(q => () => runQuery(spark, d, q, queries(q), t)))
     }
-    out.arr("pass_s", passWalls.map(Json.num))
-    out.num("heap_live_mb", liveHeapMb())
-    out.arr("pass_cpu_s", passCpu.map(Json.num))
-    out.arr("pass_steal_s", passSteal.map(Json.num))
 
-    trace.foreach { t =>
-      out.raw("layers", t.finish())
+    val passes = (0 until warmup + timed).map(i => pass(i, dir, trace))
+    out.num("heap_live_mb", liveHeapMb())
+
+    trace.foreach(t => out.raw("layers", t.finish()))  // fills the records
+    out.arr("passes", passes.map(_.render))
+    trace.foreach { _ =>
       out.raw("kernels", Kernels.measure(spark, dir))
-      // Fixed-vs-data split, untraced: one more pass at the main scale
-      // and two at a smaller one, keeping the second, so that both
-      // timed passes run with warm code and their memos built.
+      // Fixed-vs-data split: the traced timed pass is the point at the
+      // main scale; after a warm-up, one untraced pass at a smaller
+      // scale is the other.
       opt.get("small").foreach { small =>
-        def again(d: String) =
-          orders(0).map(q => runQuery(spark, d, q, queries(q), 0, None).render)
-        out.arr("fit_big", again(dir))
         Tables.names.foreach(Tables.t(spark, small, _))
-        again(small)
-        out.arr("fit_small", again(small))
+        pass(passes.size, small, None)
+        out.raw("fit_small", pass(passes.size + 1, small, None).render)
       }
     }
-    out.arr("queries", records.map(_.render))
     out.num("peak_rss_mb", peakRssMb())
     spark.stop()
     Files.writeString(Paths.get(opt("out")), out.render + "\n")
@@ -116,10 +89,9 @@ object Harness {
   /** One timed query: the `queries(q)` call, then `.count()`. */
   def runQuery(spark: SparkSession, dir: String, q: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      pass: Int, trace: Option[Trace]): Json = {
+      trace: Option[Trace]): Json = {
     val rec = new Json
     rec.str("name", q)
-    rec.num("pass", pass)
     trace.foreach(_.begin())
     val t0 = System.nanoTime()
     var build = 0.0
@@ -132,20 +104,11 @@ object Harness {
       case scala.util.control.NonFatal(e) =>
         rec.str("error", String.valueOf(e.getMessage).take(300))
     }
-    rec.num("wall_s", (System.nanoTime() - t0) / 1e9)
+    val wall = (System.nanoTime() - t0) / 1e9
+    rec.num("wall_s", wall)
     rec.num("build_s", build)
-    trace.foreach(_.end(rec))
+    trace.foreach(_.end(rec, wall))
     rec
-  }
-
-  /** Time the hypervisor ran something else on this machine's vCPUs
-    * (`steal` in /proc/stat, in USER_HZ ticks), averaged per vCPU:
-    * wall time this process lost through no doing of its own. */
-  def stealSeconds(): Double = {
-    val lines = Files.readAllLines(Paths.get("/proc/stat"))
-    val cpu = lines.get(0).trim.split("\\s+")
-    val vcpus = (1 until lines.size).count(i => lines.get(i).matches("cpu\\d+ .*"))
-    if (cpu.length > 8) cpu(8).toDouble / 100.0 / math.max(1, vcpus) else 0.0
   }
 
   /** Heap still in use after a full collection, in MB: what the run
@@ -166,6 +129,26 @@ object Harness {
         return l.split("\\s+")(1).toDouble / 1024
     }
     0.0
+  }
+}
+
+/** One pass: its query records, wall time and process CPU time. */
+class Pass(index: Int, val records: Seq[Json], wallS: Double, cpuS: Double) {
+  def render: String = new Json().num("pass", index).num("wall_s", wallS)
+    .num("cpu_s", cpuS).arr("queries", records.map(_.render)).render
+}
+
+object Pass {
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** Runs the queries in order, back to back. */
+  def run(index: Int, queries: Seq[() => Json]): Pass = {
+    val c0 = os.getProcessCpuTime
+    val t0 = System.nanoTime()
+    val recs = queries.map(_())
+    new Pass(index, recs, (System.nanoTime() - t0) / 1e9,
+      (os.getProcessCpuTime - c0) / 1e9)
   }
 }
 

@@ -99,7 +99,7 @@ class Trace(spark: SparkSession) {
 
   /** A query's window and the counters read synchronously around it. */
   private case class Window(rec: Json, start: Long, built: Long, end: Long,
-      compileS: Double, compiles: Double)
+      wallS: Double, compileS: Double, compiles: Double)
   private val windows = ArrayBuffer.empty[Window]
   private var t0, tBuilt = 0L
   private var compile0, compiles0 = 0.0
@@ -115,9 +115,10 @@ class Trace(spark: SparkSession) {
 
   def built(): Unit = tBuilt = System.currentTimeMillis()
 
-  def end(rec: Json): Unit = {
+  /** Closes the query's window; `wallS` is its own timed wall. */
+  def end(rec: Json, wallS: Double): Unit = {
     val t1 = System.currentTimeMillis()
-    windows += Window(rec, t0, tBuilt, t1,
+    windows += Window(rec, t0, tBuilt, t1, wallS,
       CodeGenerator.compileTime / 1e9 - compile0,
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     val persisted = sc.getPersistentRDDs.keySet
@@ -134,10 +135,12 @@ class Trace(spark: SparkSession) {
   }
 
   /** Waits for the bus to go quiet, then fills each query record with
-    * its per-layer figures; returns the run's memo peaks as JSON. */
+    * its per-layer figures; returns the run's memo peaks and the count
+    * of jobs no query window holds as JSON. */
   def finish(): String = {
     drain()
     stop()
+    val open = jobStart.size
     val n = windows.size
     val starts = windows.map(_.start).toArray
     def owner(t: Long): Int = {
@@ -158,11 +161,11 @@ class Trace(spark: SparkSession) {
     val batch = sums(batches.asScala, 3)
     val stageN = sums(stages.asScala.map(t => (t, Array(1.0))), 1)
     val jobList = jobs.asScala.toSeq
+    val outside = jobList.count { case (s, _) => owner(s) < 0 }
     windows.zipWithIndex.foreach { case (w, k) =>
       val mine = jobList.filter { case (s, _) => owner(s) == k }
       val buildJobs = mine.count { case (s, _) => s <= w.built }
-      val jobS = unionSeconds(mine, w.start, w.end)
-      val wall = (w.end - w.start) / 1e3
+      val jobS = unionSeconds(mine)
       val gap = gapSeconds(mine, w.start, w.end)
       val r = w.rec
       val fields = Seq(
@@ -182,12 +185,13 @@ class Trace(spark: SparkSession) {
         "stream.state_rows" -> batch(k)(2)) ++
         TaskCols.zip(task(k))
       fields.foreach { case (f, v) => r.num(f, v) }
-      r.num("window_s", wall)
-      // job time and driver gap are computed independently; together
-      // they must cover the query's window exactly.
-      r.raw("split_ok", (math.abs(jobS + gap - wall) < 1e-6).toString)
+      // The query's jobs, unclipped, plus the time its window had no
+      // job must make up its own timed wall: a job that outlives the
+      // query, or a wrong window, breaks the sum.
+      r.raw("split_ok", (math.abs(jobS + gap - w.wallS) <= SplitTolS).toString)
     }
     val o = new Json
+    o.num("unattributed_jobs", outside + open)
     o.num("memo.rdds", memoIds.size)
     o.num("memo.stored_mb", memoPeakMb)
     o.render
@@ -207,6 +211,9 @@ class Trace(spark: SparkSession) {
 object Trace {
   val MB: Double = 1024.0 * 1024.0
 
+  /** Window ends are read in whole milliseconds, the wall in ns. */
+  val SplitTolS: Double = 0.005
+
   val TaskCols: Seq[String] = Seq(
     "executor.run_s", "executor.cpu_s", "executor.deser_s", "executor.gc_s",
     "executor.spill_mb", "shuffle.write_mb", "shuffle.read_mb",
@@ -214,12 +221,11 @@ object Trace {
     "scan.input_rows", "write.output_mb", "write.output_rows",
     "scheduler.tasks")
 
-  /** Seconds of [lo, hi] covered by at least one job interval. */
-  def unionSeconds(jobs: Seq[(Long, Long)], lo: Long, hi: Long): Double = {
+  /** Seconds covered by at least one job interval. */
+  def unionSeconds(jobs: Seq[(Long, Long)]): Double = {
     var covered = 0L
-    var reach = lo
-    jobs.map { case (s, e) => (math.max(s, lo), math.min(e, hi)) }
-      .filter { case (s, e) => e > s }.sortBy(_._1)
+    var reach = Long.MinValue
+    jobs.sortBy(_._1)
       .foreach { case (s, e) =>
         if (e > reach) { covered += e - math.max(s, reach); reach = e }
       }
